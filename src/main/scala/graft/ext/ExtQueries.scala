@@ -33,8 +33,8 @@ object ExtQueries {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     fanOut(spark.read.parquet(s"$dir/embeddings.parquet"), spark)
 
-  /** Spark-visible scratch location for session-shared artifacts (the
-    * pair graph, the MinHash index). `graft.scratch.dir` may point to
+  /** Spark-visible scratch location for session-shared artifacts (every
+    * [[sharedArtifact]] kind). `graft.scratch.dir` may point to
     * any URI every executor can reach — the lake root, an HDFS/S3
     * scratch bucket; the artifact lands under
     * `<root>/<artifact>/<appId>_<corpusHash>`. Without the conf, LOCAL
@@ -61,27 +61,56 @@ object ExtQueries {
     }
   }
 
+  /** One build of a session-shared artifact. The build runs under this
+    * holder's lock, never inside the memo map's compute function: a
+    * build may itself call another `shared*` (the predictions train
+    * the lang model, the bloom reads the digest index), and a nested
+    * `computeIfAbsent` on the same map is forbidden. A build that
+    * throws records nothing, so the next call builds again.
+    */
+  private final class ArtifactOnce {
+    private var path: Option[String] = None
+    def get(build: => String): String = synchronized {
+      path.getOrElse { val p = build; path = Some(p); p }
+    }
+  }
+
+  private val artifactMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, ArtifactOnce]()
+  /** The build-once memo behind every `shared*` artifact: `build` lands
+    * the `kind` artifact of corpus `dir` at the given [[scratchPath]]
+    * once per (application, corpus, scratch root, kind), and every
+    * later call returns that path.
+    */
+  private def sharedArtifact(spark: SparkSession, dir: String, kind: String)
+                            (build: String => Unit): String = {
+    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
+      spark.conf.getOption("graft.scratch.dir").getOrElse("") + "@" + kind
+    artifactMemo.computeIfAbsent(key, _ => new ArtifactOnce).get {
+      val p = scratchPath(spark, kind, dir)
+      build(p)
+      p
+    }
+  }
+
+  /** The held split (`doc_id % 10 <> 0`) most persisted indexes and
+    * models are built from; the `% 10 = 0` slice plays the ingest batch.
+    */
+  private def held(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir).where(col("doc_id") % 10 =!= 0)
+
   /** The near-dup PAIR GRAPH shared by every keep policy over the same
     * corpus (q23 keeps the lowest id, q44 keeps the best member): the
     * signature + banding + exact-verify pipeline runs ONCE per
-    * (session, corpus) and lands as parquet ([[Dedup.writePairGraph]])
-    * under [[scratchPath]]; each consumer is then a cheap parquet scan
-    * plus its own clustering/keep pass instead of a full re-derivation.
-    * At 100 TB the pair graph is the expensive artifact — recomputing
-    * it per policy doubles the dominant cost for byte-identical input.
+    * (session, corpus) and lands as parquet ([[Dedup.writePairGraph]]);
+    * each consumer is then a cheap parquet scan plus its own
+    * clustering/keep pass instead of a full re-derivation. At 100 TB
+    * the pair graph is the expensive artifact — recomputing it per
+    * policy doubles the dominant cost for byte-identical input.
     */
-  private val pairGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedPairGraph(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = pairGraphMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "pair_graph", dir)
-      Dedup.writePairGraph(docs(spark, dir), p, shingleSize = 3, threshold = 0.8)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def sharedPairGraph(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "pair_graph")(p =>
+      Dedup.writePairGraph(docs(spark, dir), p, shingleSize = 3, threshold = 0.8)))
 
   /** Marker-token language profiles (sorted by language, which is the
     * argmax tie-break order).
@@ -312,34 +341,24 @@ object ExtQueries {
       .select(col("doc_id"), col("stopword_frac"))
       .orderBy("doc_id")
 
-  /** Incremental near-dup: every 10th doc plays the "incoming batch",
-    * matched against the remaining corpus (cross-set pairs only).
-    */
   /** Incremental near-dup probes the PERSISTED corpus index (built once
     * per (session, corpus) like [[sharedPairGraph]]) — the operational
     * model the operator exists for: at 100 TB the banding IS the index
     * and each ingest batch pays only its own hashing + the band join.
     * Output ≡ the direct operator by construction (ExtSpec round-trip).
     */
-  private val minHashIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def sharedMinHashIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "mh_index")(p =>
+      Dedup.minHashIndex(held(spark, dir), shingleSize = 3)
+        .write.mode("overwrite").parquet(p)))
 
   /** Persisted substring-window index (corpus = `doc_id % 10 <> 0`),
     * parquet-round-tripped once per session like [[sharedMinHashIndex]].
     */
-  private val substringIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedSubstringIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = substringIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "substr_index", dir)
-      Dedup.substringIndex(docs(spark, dir).where(col("doc_id") % 10 =!= 0),
-        minTokens = 8).write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def sharedSubstringIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "substr_index")(p =>
+      Dedup.substringIndex(held(spark, dir), minTokens = 8)
+        .write.mode("overwrite").parquet(p)))
 
   /** Incremental exact-substring cut ([[Dedup.stripExactSubstringsAgainstIndex]]):
     * strip from the `doc_id % 10 = 0` batch every ≥8-token run that
@@ -357,19 +376,10 @@ object ExtQueries {
     * `doc_id % 10 <> 0`), parquet-round-tripped once per session like
     * [[sharedSubstringIndex]].
     */
-  private val charSubstringIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedCharSubstringIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = charSubstringIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "char_substr_index", dir)
-      Dedup.charSubstringIndex(docs(spark, dir).where(col("doc_id") % 10 =!= 0),
-        minChars = 50).write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def sharedCharSubstringIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "char_substr_index")(p =>
+      Dedup.charSubstringIndex(held(spark, dir), minChars = 50)
+        .write.mode("overwrite").parquet(p)))
 
   /** Incremental exact-substring cut at CHAR grain
     * ([[Dedup.stripExactCharSubstringsAgainstIndex]]): strip from the
@@ -384,18 +394,10 @@ object ExtQueries {
       sharedCharSubstringIndex(spark, dir), minChars = 50)
       .select(col("doc_id"), col("text"), col("n_cut_chars"))
       .orderBy("doc_id")
-  private[graft] def sharedMinHashIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = minHashIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "mh_index", dir)
-      Dedup.minHashIndex(docs(spark, dir).where(col("doc_id") % 10 =!= 0),
-        shingleSize = 3).write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
 
+  /** Incremental near-dup: every 10th doc plays the "incoming batch",
+    * matched against the remaining corpus (cross-set pairs only).
+    */
   def q46(spark: SparkSession, dir: String): DataFrame =
     Dedup.nearDupMinHashAgainstIndex(
       docs(spark, dir).where(col("doc_id") % 10 === 0),
@@ -1174,21 +1176,12 @@ object ExtQueries {
     * story (index rolls forward per batch; bloom rebuilds from the
     * compacted index).
     */
-  private val bloomIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private[graft] def sharedBloomIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val (ip, bp) = bloomIndexMemo.computeIfAbsent(key, _ => {
-      val ip = scratchPath(spark, "exact_index", dir)
-      val bp = scratchPath(spark, "exact_bloom", dir)
-      Dedup.exactIndex(docs(spark, dir).where(col("doc_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(ip)
-      Dedup.bloomOfIndex(spark.read.parquet(ip))
-        .write.mode("overwrite").parquet(bp)
-      (ip, bp)
-    })
-    (spark.read.parquet(ip), spark.read.parquet(bp))
+    def index = spark.read.parquet(sharedArtifact(spark, dir, "exact_index")(p =>
+      Dedup.exactIndex(held(spark, dir)).write.mode("overwrite").parquet(p)))
+    val bloom = sharedArtifact(spark, dir, "exact_bloom")(p =>
+      Dedup.bloomOfIndex(index).write.mode("overwrite").parquet(p))
+    (index, spark.read.parquet(bloom))
   }
 
   /** q74's incremental exact dedup THROUGH the Bloom prefilter: the
@@ -1220,19 +1213,9 @@ object ExtQueries {
     * parquet under [[scratchPath]] — the CCNet operational shape
     * (train on trusted text, score every candidate batch forever).
     */
-  private val lmModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedLmModel(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = lmModelMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "lm_model", dir)
-      TextOps.lmTrain(docs(spark, dir).where(col("doc_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def sharedLmModel(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "lm_model")(p =>
+      TextOps.lmTrain(held(spark, dir)).write.mode("overwrite").parquet(p)))
 
   /** Persisted-LM probe: the ingest batch (doc_id % 10 == 0) scored
     * against the PRE-TRAINED parquet model — q73's operator in its
@@ -1255,19 +1238,10 @@ object ExtQueries {
     * embedding-space build-once/probe-forever shape
     * ([[Similarity.annIndex]]).
     */
-  private val annIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedAnnIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = annIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "ann_index", dir)
+  private[graft] def sharedAnnIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "ann_index")(p =>
       Similarity.annIndex(emb(spark, dir).where(col("vec_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+        .write.mode("overwrite").parquet(p)))
 
   /** Persisted-ANN probe: the ingest batch (vec_id % 10 == 0) top-k'd
     * against the PRE-BUILT signature index — q16's operator in its
@@ -1306,23 +1280,15 @@ object ExtQueries {
     * [[scratchPath]] — 16 bytes + id per image; probes never re-read
     * or re-decode the corpus payloads.
     */
-  private val imgSigIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedImageSigIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = imgSigIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "img_sig_index", dir)
+  private[graft] def sharedImageSigIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "img_sig_index") { p =>
       import spark.implicits._
-      Multimodal.dHash(docs(spark, dir).where(col("doc_id") % 10 =!= 0)
+      Multimodal.dHash(held(spark, dir)
           .select(col("doc_id"), col("text")).as[(Long, String)]
           .map { case (id, text) =>
             Multimodal.Asset(id, "image", Multimodal.renderTextImage(text)) })
         .write.mode("overwrite").parquet(p)
-      p
     })
-    spark.read.parquet(path)
-  }
 
   /** Incremental IMAGE dedup: the ingest batch (doc_id % 10 == 0,
     * rendered + dHashed fresh) probed against the PRE-BUILT signature
@@ -1385,21 +1351,11 @@ object ExtQueries {
     * and landed as parquet under [[scratchPath]] — train-once/
     * score-forever, the GPT-3 quality-filter operational shape.
     */
-  private val qualityModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedQualityModel(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = qualityModelMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "quality_model", dir)
+  private[graft] def sharedQualityModel(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "quality_model")(p =>
       QualityModel.qualityTrain(
-        docs(spark, dir).where(col("doc_id") % 10 =!= 0)
-          .withColumn("label", col("lang") === "en"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+        held(spark, dir).withColumn("label", col("lang") === "en"))
+        .write.mode("overwrite").parquet(p)))
 
   /** Persisted-quality-model probe: the ingest batch (doc_id % 10 ==
     * 0) scored against the PRE-TRAINED parquet model — q86's operator
@@ -1420,19 +1376,9 @@ object ExtQueries {
     * bootstraps from its already-routed slice) and landed as parquet —
     * train-once/route-forever, the fastText-lid operational shape.
     */
-  private val langModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedLangModel(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = langModelMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "lang_model", dir)
-      LangModel.langTrain(docs(spark, dir).where(col("doc_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+  private[graft] def sharedLangModel(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "lang_model")(p =>
+      LangModel.langTrain(held(spark, dir)).write.mode("overwrite").parquet(p)))
 
   /** Trained-language-ID probe: the ingest slice (doc_id % 10 == 0)
     * routed by the PRE-TRAINED persisted char-n-gram NB model — q87's
@@ -1468,18 +1414,10 @@ object ExtQueries {
     * ([[LangModel.writePredictions]]) — the score-once/probe-forever
     * face SCALE_r18's q136 measurement points at.
     */
-  private val predictionsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedPredictions(spark: SparkSession, dir: String): String = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    predictionsMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "lang_predictions", dir)
+  private[graft] def sharedPredictions(spark: SparkSession, dir: String): String =
+    sharedArtifact(spark, dir, "lang_predictions")(p =>
       LangModel.writePredictions(spark, docs(spark, dir).drop("lang"),
-        sharedLangModel(spark, dir), p)
-      p
-    })
-  }
+        sharedLangModel(spark, dir), p))
 
   /** q136 through the PERSISTED predictions artifact
     * ([[CcNet.curateWithPredictions]] over [[sharedPredictions]]):
@@ -1787,18 +1725,10 @@ object ExtQueries {
     * build-once/probe-forever face of the centrality family (the
     * pair-graph/ANN-index pattern).
     */
-  private val rankSnapshotMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedRankSnapshot(spark: SparkSession, dir: String): String = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    rankSnapshotMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "rank_snapshot", dir)
+  private[graft] def sharedRankSnapshot(spark: SparkSession, dir: String): String =
+    sharedArtifact(spark, dir, "rank_snapshot")(p =>
       LinkGraph.writeRankSnapshot(spark,
-        LinkGraph.hostEdges(linkPages(spark, dir)), p, iterations = 3)
-      p
-    })
-  }
+        LinkGraph.hostEdges(linkPages(spark, dir)), p, iterations = 3))
 
   /** Persisted-rank page cut ([[LinkGraph.hostRankKeep]]): pages
     * probed against the PRE-BUILT rank snapshot at 1.5× the
@@ -1994,20 +1924,10 @@ object ExtQueries {
     * landed as parquet under [[scratchPath]] — tokenize-once/
     * segment-forever ([[Bpe]]).
     */
-  private val bpeModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedBpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = bpeModelMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "bpe_model", dir)
-      Bpe.bpeTrain(docs(spark, dir).where(col("doc_id") % 10 =!= 0),
-          numMerges = 100)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    Bpe.loadMerges(spark.read.parquet(path))
-  }
+  private[graft] def sharedBpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] =
+    Bpe.loadMerges(spark.read.parquet(sharedArtifact(spark, dir, "bpe_model")(p =>
+      Bpe.bpeTrain(held(spark, dir), numMerges = 100)
+        .write.mode("overwrite").parquet(p))))
 
   /** Sequence packing by SUBWORD (BPE) token counts from the persisted
     * in-engine tokenizer — q34's operator fed through the
@@ -2025,20 +1945,10 @@ object ExtQueries {
       .orderBy("lang", "bin_id")
   }
 
-  private val unigramModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedUnigramModel(spark: SparkSession, dir: String): UnigramLm.Model = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = unigramModelMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "unigram_model", dir)
-      UnigramLm.unigramTrain(docs(spark, dir).where(col("doc_id") % 10 =!= 0),
-          vocabSize = 300, maxPieceLen = 6)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    UnigramLm.loadModel(spark.read.parquet(path))
-  }
+  private[graft] def sharedUnigramModel(spark: SparkSession, dir: String): UnigramLm.Model =
+    UnigramLm.loadModel(spark.read.parquet(sharedArtifact(spark, dir, "unigram_model")(p =>
+      UnigramLm.unigramTrain(held(spark, dir), vocabSize = 300, maxPieceLen = 6)
+        .write.mode("overwrite").parquet(p))))
 
   /** Sequence packing by UNIGRAM-LM (SentencePiece-style) token counts
     * from the persisted in-engine tokenizer ([[UnigramLm]]) — q90's
@@ -2325,22 +2235,13 @@ object ExtQueries {
       .orderBy("doc_id")
   }
 
-  private val dsirModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private[graft] def sharedDsirModels(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val (rawP, tgtP) = dsirModelMemo.computeIfAbsent(key, _ => {
-      val corpus = docs(spark, dir).where(col("doc_id") % 10 =!= 0)
-      val rp = scratchPath(spark, "dsir_raw_model", dir)
-      val tp = scratchPath(spark, "dsir_tgt_model", dir)
-      Dsir.dsirModel(corpus).write.mode("overwrite").parquet(rp)
-      Dsir.dsirModel(corpus.where(col("lang") === "en"))
-        .write.mode("overwrite").parquet(tp)
-      (rp, tp)
-    })
-    (spark.read.parquet(rawP), spark.read.parquet(tgtP))
+    def model(kind: String, corpus: DataFrame) =
+      spark.read.parquet(sharedArtifact(spark, dir, kind)(p =>
+        Dsir.dsirModel(corpus).write.mode("overwrite").parquet(p)))
+    (model("dsir_raw_model", held(spark, dir)),
+      model("dsir_tgt_model", held(spark, dir).where(col("lang") === "en")))
   }
 
   /** Incremental DSIR ([[Dsir.dsirScoreAgainstModels]]): the
@@ -2439,19 +2340,10 @@ object ExtQueries {
       .select(col("doc_id"), col("text"), col("n_cut_lines"))
       .orderBy("doc_id")
 
-  private val lineIndexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def sharedLineIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = spark.sparkContext.applicationId + "@" + dir + "@" +
-      spark.conf.getOption("graft.scratch.dir").getOrElse("")
-    val path = lineIndexMemo.computeIfAbsent(key, _ => {
-      val p = scratchPath(spark, "line_index", dir)
+  private[graft] def sharedLineIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(sharedArtifact(spark, dir, "line_index")(p =>
       Dedup.lineIndex(reflowedDocs(spark, dir).where(col("doc_id") % 10 =!= 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
-  }
+        .write.mode("overwrite").parquet(p)))
 
   /** Incremental duplicate-line cut
     * ([[Dedup.stripDuplicateLinesAgainstIndex]]): strip from the

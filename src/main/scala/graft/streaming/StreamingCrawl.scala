@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * for a one-shot backfill).
   *
   * Per micro-batch, in the family's shared replay contract
-  * (strictly-earlier index probe, per-batch partition overwrites —
-  * redelivery is idempotent):
+  * ([[StreamingDedup.priorBatches]] probe, checked partition
+  * overwrites — redelivery is idempotent):
   *  1. parse every shard's `response` AND `conversion` (WET) records
   *     ([[graft.io.Warc.parseBytes]] — per-record gzip, HTTP
   *     envelopes, charset);
@@ -225,19 +225,11 @@ object StreamingCrawl {
             .otherwise(col("url"))
         else col("url"))
       .select("doc_id", "url", "__durl", "ts", "html", "__ct")
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // guard on a COMMITTED batch partition, not bare existence: an
-    // operator-pre-created (or crashed-first-batch) empty root would
-    // make the parquet read throw 'Unable to infer schema' and wedge
-    // the stream until manual cleanup
-    val hasIndex = fs.exists(idxPath) && fs.listStatus(idxPath)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("__batch="))
-    val kept = (if (hasIndex)
-      graft.ext.Dedup.urlDedupAgainstIndex(pages,
-        spark.read.parquet(indexRoot).where(col("__batch") < batchId),
-        urlCol = "__durl")
-    else graft.ext.Dedup.urlDedup(pages, urlCol = "__durl")).cache()
+    val kept = (StreamingDedup.priorBatches(spark, indexRoot, batchId) match {
+      case Some(index) =>
+        graft.ext.Dedup.urlDedupAgainstIndex(pages, index, urlCol = "__durl")
+      case None => graft.ext.Dedup.urlDedup(pages, urlCol = "__durl")
+    }).cache()
     try {
       val lang = graft.ext.Html.htmlLang(col("html"))
       use(kept.select(col("doc_id"), col("url"), col("ts"), col("url_key"),

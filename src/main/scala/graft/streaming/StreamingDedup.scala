@@ -37,44 +37,35 @@ object StreamingDedup {
     * against the persisted digest index ([[graft.ext.Dedup.exactIndex]]
     * layout). Per micro-batch: probe the index (drop texts any earlier
     * batch carried, keep the lowest id within the batch), land
-    * survivors under `outRoot/b<batchId>`, and roll the index forward
-    * by writing the batch's digests under `indexRoot/b<batchId>`.
+    * survivors under `outRoot/__batch=<id>`, and roll the index forward
+    * by writing the batch's digests under `indexRoot/__batch=<id>`.
     *
     * Complements [[exactWithinWatermark]] from the other end of the
     * state spectrum: watermark state is bounded but forgets; the
     * digest index REMEMBERS everything at 16 bytes per distinct text —
     * unbounded but tiny, and durable across restarts.
     *
-    * Replay-safe by construction: both writes land in the batch's own
-    * Hive-style partition directory (`__batch=<id>`, an idempotent
-    * overwrite that partition discovery folds into whole-root reads),
-    * and the probe sees STRICTLY EARLIER batches only
-    * (`__batch < batchId`) — exactly the index state the batch saw on
-    * its first delivery, so a replay reproduces its original output
-    * even if later partitions already exist on disk.
+    * Replay-safe by construction: both writes are checked overwrites
+    * of the batch's own `__batch=<id>` partition ([[landBatchChecked]])
+    * and the probe is [[priorBatches]], so a replay reproduces its
+    * original output even if later partitions already exist on disk.
     */
   def exactAgainstIndexSink(indexRoot: String, outRoot: String,
                             idCol: String = "doc_id", textCol: String = "text")
                            (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
     // the micro-batch frame feeds both the dedup and the index build —
     // cached so the source is read once per batch, not once per write
     // (Spark re-evaluates an uncached foreachBatch frame per action)
     batch.cache()
     try {
-      val kept = prior match {
+      val kept = priorBatches(spark, indexRoot, batchId) match {
         case Some(index) => graft.ext.Dedup.exactAgainst(batch, index, idCol, textCol)
         case None        => graft.ext.Dedup.exact(batch, idCol, textCol)
       }
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.exactIndex(batch, textCol)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      landBatchChecked(graft.ext.Dedup.exactIndex(batch, textCol),
+        s"$indexRoot/__batch=$batchId")
     } finally batch.unpersist()
   }
 
@@ -94,10 +85,7 @@ object StreamingDedup {
     *     index forward with the KEPT docs' signatures (the index is the
     *     retained corpus, so dropped near-dups never bloat it).
     *
-    * Same replay contract as [[exactAgainstIndexSink]]: both writes are
-    * per-batch partition overwrites and the probe reads STRICTLY
-    * EARLIER batches, so re-delivering a batch id reproduces its
-    * original output byte-for-byte.
+    * Same replay contract as [[exactAgainstIndexSink]].
     *
     * The index is parameter-bound (shingleSize/numHashes/bands/seed
     * must match across the stream's lifetime — keep them with the
@@ -140,10 +128,7 @@ object StreamingDedup {
     *  3. land the kept vectors under `outRoot/__batch=<id>` and roll
     *     the index forward with the KEPT vectors' signatures.
     *
-    * Same replay contract as [[exactAgainstIndexSink]]: both writes
-    * are per-batch partition overwrites and the probe reads STRICTLY
-    * EARLIER batches, so re-delivering a batch id reproduces its
-    * original output byte-for-byte.
+    * Same replay contract as [[exactAgainstIndexSink]].
     *
     * The index is parameter-bound AND capacity-bound: (tables, bits,
     * dims, seed) must stay fixed across the stream's lifetime — the
@@ -168,13 +153,7 @@ object StreamingDedup {
                                seed: Long = 0x5EED, inBatchClusters: Int = 1)
                               (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val afterIndex = prior match {
+    val afterIndex = priorBatches(spark, indexRoot, batchId) match {
       case Some(index) =>
         val hits = graft.ext.Similarity.annPairsAgainstIndex(batch, index,
             threshold, tables, bits, dims, idCol, vecCol, seed)
@@ -187,9 +166,10 @@ object StreamingDedup {
     val kept = graft.ext.Similarity.semanticDedup(afterIndex, threshold,
       inBatchClusters, idCol, vecCol).cache()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Similarity.annIndex(kept, tables, bits, dims, idCol, vecCol, seed)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      landBatchChecked(
+        graft.ext.Similarity.annIndex(kept, tables, bits, dims, idCol, vecCol, seed),
+        s"$indexRoot/__batch=$batchId")
     } finally kept.unpersist()
   }
 
@@ -214,8 +194,7 @@ object StreamingDedup {
     *     `outRoot/__batch=<id>` and roll the index forward with the
     *     kept signatures only.
     *
-    * Same replay contract as the text sinks (per-batch partition
-    * overwrites, strictly-earlier probe) and the same documented
+    * Same replay contract as the text sinks and the same documented
     * greedy-vs-batch-CC divergence on transitive chains.
     */
   def chunkSigAgainstIndexSink(indexRoot: String, outRoot: String,
@@ -225,20 +204,14 @@ object StreamingDedup {
                               (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the signature frame feeds FOUR plan branches (index probe,
     // in-batch self-join — two lineage copies — and the survivors'
     // anti-join); without a cache the payload-decoding mapPartitions
     // would re-execute per branch, breaking the hashed-ONCE contract
     val sigs = sigOf(batch.select(col("asset_id"), col("kind"), col("payload"))
       .as[graft.ext.Multimodal.Asset]).cache()
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
     try {
-      val afterIndex = prior match {
+      val afterIndex = priorBatches(spark, indexRoot, batchId) match {
         case Some(index) =>
           val hits = graft.ext.Dedup.nearDupChunkSigsAgainstIndex(sigs, index,
               "asset_id", "phash", maxHamming)
@@ -249,10 +222,11 @@ object StreamingDedup {
       val keptSigs = graft.ext.Dedup.dedupNearDups(afterIndex,
         graft.ext.Dedup.nearDupChunkSigs(afterIndex, "asset_id", "phash", maxHamming),
         "asset_id")
-      batch.join(keptSigs.select("asset_id"), Seq("asset_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      keptSigs.select("asset_id", "phash")
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(
+        batch.join(keptSigs.select("asset_id"), Seq("asset_id"), "left_semi"),
+        s"$outRoot/__batch=$batchId")
+      landBatchChecked(keptSigs.select("asset_id", "phash"),
+        s"$indexRoot/__batch=$batchId")
     } finally sigs.unpersist()
   }
 
@@ -263,13 +237,7 @@ object StreamingDedup {
                               seed: Long = 0xC0FFEE)
                              (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val afterIndex = prior match {
+    val afterIndex = priorBatches(spark, indexRoot, batchId) match {
       case Some(index) =>
         val hits = graft.ext.Dedup.nearDupMinHashAgainstIndex(batch, index,
             idCol, textCol, shingleSize, threshold, numHashes, bands, seed)
@@ -284,10 +252,10 @@ object StreamingDedup {
         threshold, numHashes, bands, seed),
       idCol).cache()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.minHashIndex(kept, idCol, textCol, shingleSize,
-          numHashes, bands, seed)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      landBatchChecked(graft.ext.Dedup.minHashIndex(kept, idCol, textCol,
+          shingleSize, numHashes, bands, seed),
+        s"$indexRoot/__batch=$batchId")
     } finally kept.unpersist()
   }
 
@@ -306,9 +274,7 @@ object StreamingDedup {
     *     forward with the SURVIVING lines only (the index is the
     *     retained corpus, so cut lines never bloat it).
     *
-    * Same replay contract as [[exactAgainstIndexSink]]: per-batch
-    * partition overwrites, strictly-earlier probe — re-delivering a
-    * batch id reproduces its original output byte-for-byte. The probe
+    * Same replay contract as [[exactAgainstIndexSink]]. The probe
     * semi-joins the raw accreted partitions without re-aggregating
     * (only hash EXISTENCE matters to a cut), so the fold/probe
     * equivalence of [[compactIndex]] carries over verbatim.
@@ -325,13 +291,7 @@ object StreamingDedup {
       require(!batch.columns.contains(c),
         s"lineDedupAgainstIndexSink reserves the '$c' column; rename it on the incoming stream"))
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
-    val crossCut = prior match {
+    val crossCut = priorBatches(spark, indexRoot, batchId) match {
       case Some(index) => graft.ext.Dedup.stripDuplicateLinesAgainstIndex(
         batch, index, minChars, idCol, textCol)
       case None => batch.withColumn("n_cut_lines", lit(0L))
@@ -346,9 +306,9 @@ object StreamingDedup {
       .drop("__cross_cut")
       .cache()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      graft.ext.Dedup.lineIndex(kept, minChars, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      landBatchChecked(graft.ext.Dedup.lineIndex(kept, minChars, idCol, textCol),
+        s"$indexRoot/__batch=$batchId")
     } finally kept.unpersist()
   }
 
@@ -383,8 +343,7 @@ object StreamingDedup {
     * text, so the streamed output is byte-identical to the one-shot
     * batch cut over the concatenated history (when arrival order
     * matches (id, pos) order — the shared first-is-lowest-id caveat).
-    * Same replay contract as [[exactAgainstIndexSink]]: per-batch
-    * partition overwrites, strictly-earlier probe. The probe semi-joins
+    * Same replay contract as [[exactAgainstIndexSink]]. The probe semi-joins
     * the raw accreted partitions (hash EXISTENCE only), so
     * [[compactIndex]]'s fold/probe equivalence carries over verbatim.
     * `minUnits`/`charGrain` are family parameters — keep them with the
@@ -400,12 +359,7 @@ object StreamingDedup {
     require(!batch.columns.contains(cutCol),
       s"substringDedupAgainstIndexSink reserves the '$cutCol' column; rename it on the incoming stream")
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
+    val prior = priorBatches(spark, indexRoot, batchId)
     // the micro-batch frame feeds the combined cut AND the index build
     // — cached so the source is read once per batch, not per write
     batch.cache()
@@ -423,11 +377,11 @@ object StreamingDedup {
           case None => graft.ext.Dedup
             .stripExactSubstrings(batch, minUnits, idCol, textCol)
         }
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
       val windows =
         if (charGrain) graft.ext.Dedup.charSubstringIndex(batch, minUnits, idCol, textCol)
         else graft.ext.Dedup.substringIndex(batch, minUnits, idCol, textCol)
-      windows.write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(windows, s"$indexRoot/__batch=$batchId")
     } finally batch.unpersist()
   }
 
@@ -448,8 +402,7 @@ object StreamingDedup {
     * Stream ≡ batch EXACTLY (keys are per-document atomic — none of
     * the substring family's coverage subtleties), under the shared
     * first-arrival-is-lowest-id caveat; same replay contract as
-    * [[exactAgainstIndexSink]] (per-batch partition overwrites,
-    * strictly-earlier probe), and [[compactIndex]] applies verbatim.
+    * [[exactAgainstIndexSink]], and [[compactIndex]] applies verbatim.
     */
   def urlDedupAgainstIndexSink(indexRoot: String, outRoot: String,
                                urlCol: String = "url",
@@ -458,23 +411,17 @@ object StreamingDedup {
     require(!batch.columns.contains("url_key"),
       "urlDedupAgainstIndexSink reserves the 'url_key' column; rename it on the incoming stream")
     val spark = batch.sparkSession
-    val idxPath = new org.apache.hadoop.fs.Path(indexRoot)
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior: Option[DataFrame] =
-      if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexRoot).where(col("__batch") < batchId))
-      else None // first batch ever
     // two consumers (out write + index roll-forward) — cached so the
     // winner election runs once per batch, not twice
-    val kept = (prior match {
+    val kept = (priorBatches(spark, indexRoot, batchId) match {
       case Some(index) => graft.ext.Dedup.urlDedupAgainstIndex(batch, index, urlCol, idCol)
       case None        => graft.ext.Dedup.urlDedup(batch, urlCol, idCol)
     }).cache()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
-      kept.where(col("url_key").isNotNull)
-        .select(xxhash64(col("url_key")).as("__uh")).distinct()
-        .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+      landBatchChecked(kept, s"$outRoot/__batch=$batchId")
+      landBatchChecked(kept.where(col("url_key").isNotNull)
+          .select(xxhash64(col("url_key")).as("__uh")).distinct(),
+        s"$indexRoot/__batch=$batchId")
     } finally kept.unpersist()
   }
 
@@ -485,12 +432,11 @@ object StreamingDedup {
     * TWO persisted index families (the normalized-digest index and the
     * MinHash-LSH index, [[graft.ext.CurationChain.corpusState]]'s
     * layout split into `__batch=` partition roots). Per micro-batch:
-    * probe both indexes strictly earlier (`__batch < batchId`), run the
-    * chain, land the curated rows under `outRoot/__batch=<id>`, and
-    * roll BOTH indexes forward with the kept rows — the streaming face
-    * of `runIncremental` + `rollForward`, with the family's shared
-    * replay contract (per-batch partition overwrites make redelivery
-    * idempotent; the first batch curates against empty state).
+    * probe both indexes ([[priorBatches]]), run the chain, land the
+    * curated rows under `outRoot/__batch=<id>`, and roll BOTH indexes
+    * forward with the kept rows — the streaming face of
+    * `runIncremental` + `rollForward`, with the family's shared replay
+    * contract (the first batch curates against empty state).
     *
     * `benchmarkSource` is the chain's decontamination reference (the
     * eval set is defined on the ORIGINAL corpus, exactly as in batch) —
@@ -508,13 +454,6 @@ object StreamingDedup {
                        (batch: DataFrame, batchId: Long): Unit = {
     import graft.ext.{CurationChain, Dedup, TextOps}
     val spark = batch.sparkSession
-    def prior(root: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
-        Some(spark.read.parquet(root).where(col("__batch") < batchId))
-      else None
-    }
     // chain stages consume the batch several times (gate profile, two
     // dedup stages, index builds) — read the source once
     batch.cache()
@@ -522,8 +461,8 @@ object StreamingDedup {
       // first batch ever: empty state frames in corpusState's exact
       // schema, built from the batch's own (empty) slice
       lazy val empty = CurationChain.corpusState(batch.limit(0))
-      val dig = prior(normIndexRoot).getOrElse(empty._1)
-      val mh = prior(minHashIndexRoot).getOrElse(empty._2)
+      val dig = priorBatches(spark, normIndexRoot, batchId).getOrElse(empty._1)
+      val mh = priorBatches(spark, minHashIndexRoot, batchId).getOrElse(empty._2)
       val kept = CurationChain.runIncremental(batch, dig, mh, benchmarkSource)
       kept.cache()
       try {
@@ -584,6 +523,37 @@ object StreamingDedup {
           "contract is single-writer per root); re-run the stream quiesced")
   }
 
+  /** The prior-state probe of every roll-forward sink: the committed
+    * `__batch=` partitions of `root` strictly below `batchId`. That is
+    * exactly the state the batch saw on its first delivery, so a replay
+    * reproduces its original output even when later partitions already
+    * exist on disk. [[compactIndex]] folds through this same read.
+    *
+    * `None` means no state yet (the first batch ever). The guard is a
+    * COMMITTED partition, not bare existence of the root: an
+    * operator-pre-created empty root, or a crashed first batch whose
+    * only partition is `__batch=0/_temporary/...`, would make the
+    * parquet read throw `UNABLE_TO_INFER_SCHEMA` on every redelivery and
+    * wedge the stream until manual cleanup. A partition counts once it
+    * holds a visible data file (a name not starting with `_` or `.`),
+    * which is what Spark's schema inference reads; `_SUCCESS` is not the
+    * signal, since a committer setting can turn it off. When every
+    * committed partition sits at or above `batchId` (a first-batch
+    * replay) the result is `Some` of an empty frame.
+    */
+  private[graft] def priorBatches(spark: org.apache.spark.sql.SparkSession,
+                                  root: String, batchId: Long): Option[DataFrame] = {
+    import org.apache.hadoop.fs.Path
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    def visible(name: String) = !name.startsWith("_") && !name.startsWith(".")
+    val committed = fs.exists(rootPath) && fs.listStatus(rootPath).exists(part =>
+      part.isDirectory && part.getPath.getName.startsWith("__batch=") &&
+        fs.listStatus(part.getPath).exists(f => f.isFile && visible(f.getPath.getName)))
+    if (committed) Some(spark.read.parquet(root).where(col("__batch") < batchId))
+    else None
+  }
+
   /** Maintenance op for any roll-forward `__batch=<id>` index the sinks
     * above accrete (digest / MinHash / ANN / chunk-signature — the
     * layout is shared): fold every partition EXCEPT the latest into a
@@ -631,9 +601,11 @@ object StreamingDedup {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
     val nFiles = math.max(1, math.ceil(mergeBytes.toDouble / targetBytes).toInt)
-    // the probe spelling, verbatim — the fold IS the probe state
-    val merged = spark.read.parquet(indexRoot)
-      .where(col("__batch") < latest).drop("__batch")
+    // the fold IS the probe state a redelivery of `latest` reads
+    val merged = priorBatches(spark, indexRoot, latest) match {
+      case Some(prior) => prior.drop("__batch")
+      case None        => return 0 // only uncommitted partitions
+    }
     val tmp = new Path(s"$indexRoot/__compact_tmp")
     fs.delete(tmp, true) // stray staging from a crashed prior run
     merged.coalesce(nFiles).write.mode("overwrite").parquet(tmp.toString)

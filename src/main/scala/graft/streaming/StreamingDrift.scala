@@ -29,8 +29,8 @@ object StreamingDrift {
     */
   def bandCountsSink(indexRoot: String, bandCol: String)
                     (batch: DataFrame, batchId: Long): Unit =
-    Diff.bandCounts(batch, bandCol)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    StreamingDedup.landBatchChecked(Diff.bandCounts(batch, bandCol),
+      s"$indexRoot/__batch=$batchId")
 
   /** Current per-band counts of the whole stream history: sum every
     * batch partition (exact — counts are sum-mergeable).

@@ -49,11 +49,10 @@ object StreamingLang {
                 ns: Seq[Int] = LangModel.DefaultNs,
                 numBuckets: Int = LangModel.DefaultBuckets)
                (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val model = spark.read.parquet(modelPath)
-    LangModel.langScoreAgainst(batch, model, alpha, idCol, textCol, ns,
-        numBuckets)
-      .write.mode("overwrite").parquet(s"$outRoot/__batch=$batchId")
+    val model = batch.sparkSession.read.parquet(modelPath)
+    StreamingDedup.landBatchChecked(
+      LangModel.langScoreAgainst(batch, model, alpha, idCol, textCol, ns, numBuckets),
+      s"$outRoot/__batch=$batchId")
   }
 
   /** The whole scored history, merged on read — drop-in for

@@ -37,8 +37,8 @@ object StreamingSketches {
   def thetaStatsSink(indexRoot: String, groupCols: Seq[String],
                      valueCol: String, lgK: Int = 12)
                     (batch: DataFrame, batchId: Long): Unit =
-    Sketches.thetaBuild(batch, groupCols, valueCol, lgK)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    StreamingDedup.landBatchChecked(Sketches.thetaBuild(batch, groupCols, valueCol, lgK),
+      s"$indexRoot/__batch=$batchId")
 
   /** Current per-facet sketch table of the whole stream history: merge
     * every batch partition down to one sketch per facet.
@@ -66,8 +66,8 @@ object StreamingSketches {
   def freqStatsSink(indexRoot: String, groupCols: Seq[String],
                     valueCol: String, maxMapSize: Int = 256)
                    (batch: DataFrame, batchId: Long): Unit =
-    Sketches.freqBuild(batch, groupCols, valueCol, maxMapSize)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    StreamingDedup.landBatchChecked(Sketches.freqBuild(batch, groupCols, valueCol, maxMapSize),
+      s"$indexRoot/__batch=$batchId")
 
   /** Current per-facet top-k heavy hitters of the whole stream history. */
   def currentTopK(spark: SparkSession, indexRoot: String,
@@ -86,8 +86,8 @@ object StreamingSketches {
   def quantStatsSink(indexRoot: String, groupCols: Seq[String],
                      valueCol: String, k: Int = 256)
                     (batch: DataFrame, batchId: Long): Unit =
-    Sketches.quantBuild(batch, groupCols, valueCol, k)
-      .write.mode("overwrite").parquet(s"$indexRoot/__batch=$batchId")
+    StreamingDedup.landBatchChecked(Sketches.quantBuild(batch, groupCols, valueCol, k),
+      s"$indexRoot/__batch=$batchId")
 
   /** Current per-facet quantile estimates of the whole stream history. */
   def currentQuantiles(spark: SparkSession, indexRoot: String,

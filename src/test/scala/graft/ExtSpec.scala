@@ -1464,6 +1464,57 @@ class ExtSpec extends AnyFunSuite {
       assert(artifacts != null && artifacts.nonEmpty,
         "the pair graph must materialize under the conf'd Spark-visible scratch root")
       assert(artifacts.head.getName.startsWith(spark.sparkContext.applicationId))
+
+      // every shared* artifact goes through one build-once memo
+      def landed(kind: String, corpusDir: String) = {
+        val tag = java.security.MessageDigest.getInstance("MD5")
+          .digest(corpusDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        Option(new java.io.File(s"$scratch/$kind").listFiles()).toSeq.flatten
+          .filter(_.getName == s"${spark.sparkContext.applicationId}_$tag")
+      }
+      def files(df: org.apache.spark.sql.DataFrame) = df.inputFiles.sorted.toSeq
+
+      // two threads on one cold key: one artifact dir, built once (a
+      // second build would overwrite it with other part files)
+      val raced = SparkTestBase.tmpDir("graft_scratch_raced")
+      docsDf(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "z y x w v")
+        .write.mode("overwrite").parquet(s"$raced/documents.parquet")
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val seen = try {
+        (1 to 2).map(_ => pool.submit(
+            new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+              def call() = { go.await(); ExtQueries.sharedPairGraph(spark, raced) }
+            }))
+          .map { f => go.countDown(); f.get() }
+      } finally pool.shutdown()
+      assert(landed("pair_graph", raced).size === 1)
+      assert(files(seen(0)) === files(seen(1)), "both racers must read ONE build")
+      assert(seen.forall(_.count() == 1L))
+
+      // a nested build (predictions train the lang model) runs cold
+      // without a recursive memo update, and the dependency builds once
+      val nested = SparkTestBase.tmpDir("graft_scratch_nested")
+      Seq((1L, "the cat sat", "en"), (2L, "le chat assis", "fr"),
+          (3L, "the dog ran", "en"), (4L, "le chien court", "fr"))
+        .toDF("doc_id", "text", "lang")
+        .write.mode("overwrite").parquet(s"$nested/documents.parquet")
+      val predictions = ExtQueries.sharedPredictions(spark, nested)
+      assert(graft.ext.LangModel.predictions(spark, predictions).count() === 4)
+      assert(landed("lang_predictions", nested).size === 1)
+      assert(landed("lang_model", nested).size === 1)
+      val modelFiles = landed("lang_model", nested).head.listFiles()
+        .map(_.getAbsolutePath).filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(files(ExtQueries.sharedLangModel(spark, nested)).map(new java.net.URI(_).getPath) ===
+        modelFiles, "the direct call must reuse the nested build, not rebuild")
+
+      // a build that throws memoizes nothing: once the corpus exists,
+      // the next call builds
+      val late = SparkTestBase.tmpDir("graft_scratch_late")
+      intercept[Exception](ExtQueries.sharedPairGraph(spark, late))
+      docsDf(1L -> "a b c d e", 2L -> "a b c d e")
+        .write.mode("overwrite").parquet(s"$late/documents.parquet")
+      assert(ExtQueries.sharedPairGraph(spark, late).count() === 1)
     } finally spark.conf.unset("graft.scratch.dir")
   }
 

@@ -23,6 +23,53 @@ class StreamingSpec extends AnyFunSuite {
   private def rec(k: String, p: String, t: String, l: String, s: Long) =
     StreamRecord(k, p, ts(t), ts(l), s)
 
+  // --- fixtures shared by the roll-forward sink tests ---
+
+  /** One gzip WARC shard of `text/html` responses, one per (url, html). */
+  private def warcShard(pages: (String, String)*): Array[Byte] = {
+    import graft.io.Warc
+    pages.map { case (url, html) => Warc.gzipMember(Warc.record(Seq(
+      "WARC-Type" -> "response", "WARC-Target-URI" -> url,
+      "WARC-Date" -> "2024-01-01T00:00:00Z",
+      "Content-Type" -> "application/http; msgtype=response"),
+      Warc.httpResponseBlock(200, "text/html", html))) }.reduce(_ ++ _)
+  }
+  /** A binaryFile-shaped micro-batch of WARC shards. */
+  private def warcBatch(shards: Array[Byte]*) = shards.zipWithIndex
+    .map { case (b, i) => (s"shard$i.warc.gz", b) }.toDF("path", "content")
+  /** A 30-token text: a one-token edit leaves 3-shingle Jaccard ≈ 0.81. */
+  private def thirtyTokens(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
+  /** Star-shaped clusters in an 8-dim space: tiny perturbations of a
+    * base vector have cosine ≈ 0.9997 (>= 0.9); distinct bases are
+    * orthogonal (cosine 0 < 0.9).
+    */
+  private def unitVec(base: Int, eps: Float): Array[Float] = {
+    val a = Array.fill(8)(0f); a(base) = 1f; a((base + 1) % 8) = eps; a
+  }
+  private def grayPng(f: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(64, 64,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 64; x <- 0 until 64) {
+      val v = math.max(0, math.min(255, f(x, y)))
+      img.setRGB(x, y, (v << 16) | (v << 8) | v)
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+  // scenes: 9 vertical bands with distinct alternation patterns —
+  // pairwise dHash distance 48-64 bits (a monotone gradient would
+  // hash every scene to the same all-ones pattern); the twin's
+  // small +25 overlay can't flip any 200-step band gradient
+  private val bandsOf = Map(
+    0 -> Array(30, 230, 30, 230, 30, 230, 30, 230, 30),
+    1 -> Array(30, 30, 230, 230, 30, 30, 230, 230, 30),
+    2 -> Array(230, 30, 230, 30, 230, 30, 230, 30, 230),
+    3 -> Array(230, 230, 30, 30, 230, 230, 30, 30, 230))
+  private def scene(s: Int)(x: Int, y: Int) = bandsOf(s)(x * 9 / 64)
+  private def twin(s: Int)(x: Int, y: Int) =
+    scene(s)(x, y) + (if (x >= 20 && x < 26 && y >= 20 && y < 26) 25 else 0)
+
   test("streaming latestPerKey == batch full merge over all micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[StreamRecord]
@@ -508,17 +555,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming crawl ingest: WARC shards -> quality cut -> URL dedup vs history -> text, replay-idempotent") {
-    import graft.io.Warc
     import graft.streaming.StreamingCrawl
     val work = SparkTestBase.tmpDir("graft_stream_crawl")
-    def shard(pages: (String, String)*): Array[Byte] =
-      pages.map { case (url, html) => Warc.gzipMember(Warc.record(Seq(
-        "WARC-Type" -> "response", "WARC-Target-URI" -> url,
-        "WARC-Date" -> "2024-01-01T00:00:00Z",
-        "Content-Type" -> "application/http; msgtype=response"),
-        Warc.httpResponseBlock(200, "text/html", html))) }.reduce(_ ++ _)
-    def batchDf(shards: Array[Byte]*) = shards.zipWithIndex
-      .map { case (b, i) => (s"shard$i.warc.gz", b) }.toDF("path", "content")
+    def shard(pages: (String, String)*) = warcShard(pages: _*)
+    def batchDf(shards: Array[Byte]*) = warcBatch(shards: _*)
     val sink = StreamingCrawl.crawlIngestSink(s"$work/idx", s"$work/out",
       blockedHosts = Seq("blocked.example.net"), bannedWords = Seq("casino")) _
     // batch 0: one good page, one blocked host, one banned word
@@ -656,19 +696,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("composed crawl->curation stream: WARC bytes to curated text vs all three histories, replay-idempotent") {
-    import graft.io.Warc
     import graft.streaming.StreamingCrawl
     val work = SparkTestBase.tmpDir("graft_stream_crawl_chain")
-    def shard(pages: (String, String)*): Array[Byte] =
-      pages.map { case (url, html) => Warc.gzipMember(Warc.record(Seq(
-        "WARC-Type" -> "response", "WARC-Target-URI" -> url,
-        "WARC-Date" -> "2024-01-01T00:00:00Z",
-        "Content-Type" -> "application/http; msgtype=response"),
-        Warc.httpResponseBlock(200, "text/html", s"<p>$html</p>"))) }.reduce(_ ++ _)
-    def batchDf(shards: Array[Byte]*) = shards.zipWithIndex
-      .map { case (b, i) => (s"shard$i.warc.gz", b) }.toDF("path", "content")
+    def shard(pages: (String, String)*) =
+      warcShard(pages.map { case (url, text) => (url, s"<p>$text</p>") }: _*)
+    def batchDf(shards: Array[Byte]*) = warcBatch(shards: _*)
     // 30-token texts so a one-token edit is a near-dup (J ≈ 0.84)
-    def base(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
+    def base(p: String) = thirtyTokens(p)
     val (tA, tB, tC) = (base("a"), base("b"), base("c"))
     val bench = Seq((20L, "benchmark five gram pattern here now")).toDF("doc_id", "text")
     val sink = StreamingCrawl.crawlToCurationSink(
@@ -1087,8 +1121,7 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestBase.tmpDir("graft_stream_neardup_idx")
     val sink = StreamingDedup.nearDupAgainstIndexSink(
       s"$work/index", s"$work/out", threshold = 0.6) _
-    // 30-token docs; a one-token edit leaves 3-shingle Jaccard ≈ 0.81
-    def base(p: String) = (1 to 30).map(i => s"$p$i").mkString(" ")
+    def base(p: String) = thirtyTokens(p)
     val (tA, tB, tC, tD) = (base("a"), base("b"), base("c"), base("d"))
     val tA2 = tA.replace("a15", "zz") // near-dup of tA
     val tA3 = tA.replace("a17", "yy") // near-dup of tA, arrives a batch later
@@ -1124,12 +1157,7 @@ class StreamingSpec extends AnyFunSuite {
     val work = SparkTestBase.tmpDir("graft_stream_semantic_idx")
     val sink = StreamingDedup.semanticAgainstIndexSink(
       s"$work/index", s"$work/out", threshold = 0.9, dims = 8) _
-    // star-shaped clusters in an 8-dim space: tiny perturbations of a
-    // base vector have cosine ≈ 0.9997 (>= 0.9); distinct bases are
-    // orthogonal (cosine 0 < 0.9)
-    def v(base: Int, eps: Float): Array[Float] = {
-      val a = Array.fill(8)(0f); a(base) = 1f; a((base + 1) % 8) = eps; a
-    }
+    def v(base: Int, eps: Float) = unitVec(base, eps)
     def batchDf(rows: (Long, Array[Float])*) = rows.toDF("vec_id", "embedding")
     // b0: in-batch twin pair (1,2) + fresh; b1: cross-batch twin of the
     // INDEXED survivor + fresh; b2: twin of b1's fresh + fresh
@@ -1162,29 +1190,6 @@ class StreamingSpec extends AnyFunSuite {
     import graft.ext.Multimodal.Asset
     val work = SparkTestBase.tmpDir("graft_stream_img_idx")
     val sink = StreamingDedup.chunkSigAgainstIndexSink(s"$work/index", s"$work/out") _
-    def grayPng(f: (Int, Int) => Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(64, 64,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 64; x <- 0 until 64) {
-        val v = math.max(0, math.min(255, f(x, y)))
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    // scenes: 9 vertical bands with distinct alternation patterns —
-    // pairwise dHash distance 48-64 bits (a monotone gradient would
-    // hash every scene to the same all-ones pattern); the twin's
-    // small +25 overlay can't flip any 200-step band gradient
-    val bandsOf = Map(
-      0 -> Array(30, 230, 30, 230, 30, 230, 30, 230, 30),
-      1 -> Array(30, 30, 230, 230, 30, 30, 230, 230, 30),
-      2 -> Array(230, 30, 230, 30, 230, 30, 230, 30, 230),
-      3 -> Array(230, 230, 30, 30, 230, 230, 30, 30, 230))
-    def scene(s: Int)(x: Int, y: Int) = bandsOf(s)(x * 9 / 64)
-    def twin(s: Int)(x: Int, y: Int) =
-      scene(s)(x, y) + (if (x >= 20 && x < 26 && y >= 20 && y < 26) 25 else 0)
     def batchDf(rows: (Long, Array[Byte])*) =
       rows.map { case (id, p) => Asset(id, "image", p) }.toDF()
     // b0: in-batch twin pair (1,2) + a fresh scene; b1: cross-batch twin
@@ -1583,5 +1588,96 @@ class StreamingSpec extends AnyFunSuite {
     sink(docsDf(40L -> "the lazy fox runs"), 3L)
     assert(outFor(Set(40L)) === wantNext,
       "scores after model compaction drifted from the uncompacted rebuild")
+  }
+
+  test("priorBatches: an empty or crashed-first-batch root lands the fresh-root first batch, every probing sink") {
+    import graft.streaming.{StreamingCrawl, StreamingDedup, StreamingDsir}
+    import graft.ext.Multimodal.Asset
+    import org.apache.spark.sql.DataFrame
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val (tA, tB) = (thirtyTokens("a"), thirtyTokens("b"))
+    val curationB0 = Seq(
+      (1L, "alpha beta gamma delta"),
+      (2L, "one two three four five six seven eight nine ten eleven twelve"))
+      .map { case (id, t) => (id, t, "en", "srcS") }.toDF("doc_id", "text", "lang", "source")
+    val crawlBench = Seq((20L, "benchmark five gram pattern here now")).toDF("doc_id", "text")
+    val tgt = SparkTestBase.tmpDir("graft_wedge_dsir_tgt")
+    graft.ext.Dsir.dsirModel(docs(100L -> "the quick brown fox"))
+      .write.mode("overwrite").parquet(tgt)
+    // (sink, roots it probes, other roots it lands, sink over a work dir, first batch)
+    val cases: Seq[(String, Seq[String], Seq[String], String => (DataFrame, Long) => Unit, DataFrame)] = Seq(
+      ("exactAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.exactAgainstIndexSink(s"$w/index", s"$w/out") _,
+        docs(1L -> "alpha", 2L -> "alpha", 3L -> "beta")),
+      ("semanticAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.semanticAgainstIndexSink(s"$w/index", s"$w/out",
+          threshold = 0.9, dims = 8) _,
+        Seq(1L -> unitVec(0, 0f), 2L -> unitVec(0, 0.02f), 3L -> unitVec(1, 0f))
+          .toDF("vec_id", "embedding")),
+      ("chunkSigAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.chunkSigAgainstIndexSink(s"$w/index", s"$w/out") _,
+        Seq(1L -> grayPng(scene(0)), 2L -> grayPng(twin(0)), 3L -> grayPng(scene(1)))
+          .map { case (id, p) => Asset(id, "image", p) }.toDF()),
+      ("nearDupAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.nearDupAgainstIndexSink(s"$w/index", s"$w/out",
+          threshold = 0.6) _,
+        docs(1L -> tA, 2L -> tA.replace("a15", "zz"), 3L -> tB)),
+      ("lineDedupAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.lineDedupAgainstIndexSink(s"$w/index", s"$w/out") _,
+        docs(1L -> "header\nbody one", 2L -> "header\nbody two")),
+      ("substringDedupAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.substringDedupAgainstIndexSink(s"$w/index", s"$w/out",
+          minUnits = 3) _,
+        docs(1L -> "q1 w1 e1 r1 t1", 2L -> "u1 u2 u3 u4")),
+      ("urlDedupAgainstIndexSink", Seq("index"), Seq("out"),
+        w => StreamingDedup.urlDedupAgainstIndexSink(s"$w/index", s"$w/out") _,
+        Seq(1L -> "https://a.example.com/p/1?utm_source=x",
+          2L -> "https://a.example.com/p/2").toDF("doc_id", "url")),
+      ("curationChainSink", Seq("dig", "mh"), Seq("out"),
+        w => StreamingDedup.curationChainSink(s"$w/dig", s"$w/mh", s"$w/out",
+          curationB0) _,
+        curationB0),
+      ("StreamingDsir.scoreSink", Seq("raw"), Seq("out"),
+        w => StreamingDsir.scoreSink(s"$w/raw", tgt, s"$w/out") _,
+        docs(10L -> "the lazy dog sleeps", 11L -> "ppq rrs ttu")),
+      ("crawlIngestSink", Seq("idx"), Seq("out"),
+        w => StreamingCrawl.crawlIngestSink(s"$w/idx", s"$w/out",
+          blockedHosts = Seq("blocked.example.net"), bannedWords = Seq("casino")) _,
+        warcBatch(warcShard(
+          "https://a.example.com/p1?utm_source=x" -> "<p>Page one body</p>",
+          "https://blocked.example.net/x" -> "<p>never lands</p>",
+          "https://a.example.com/casino" -> "<p>never lands</p>"))),
+      ("crawlToCurationSink", Seq("uidx", "didx", "midx"), Seq("out"),
+        w => StreamingCrawl.crawlToCurationSink(s"$w/uidx", s"$w/didx",
+          s"$w/midx", s"$w/out", crawlBench) _,
+        warcBatch(warcShard(
+          "https://c.example.com/a" -> s"<p>$tA</p>",
+          "https://c.example.com/b" -> s"<p>$tB</p>"))))
+    for ((name, probed, landedOnly, sinkAt, b0) <- cases) {
+      // every landed root, row for row (JSON keeps binary payloads comparable)
+      def landing(work: String) = (probed ++ landedOnly).map(r =>
+        r -> spark.read.parquet(s"$work/$r").toJSON.collect().sorted.toSeq).toMap
+      val fresh = SparkTestBase.tmpDir("graft_wedge_fresh")
+      sinkAt(fresh)(b0, 0L)
+      val want = landing(fresh)
+      // an operator-pre-created empty root per probed index
+      val empty = SparkTestBase.tmpDir("graft_wedge_empty")
+      probed.foreach(r => assert(new java.io.File(s"$empty/$r").mkdirs()))
+      // a first batch that crashed before its job commit: only the
+      // task output under __batch=0/_temporary exists
+      val crashed = SparkTestBase.tmpDir("graft_wedge_crashed")
+      probed.foreach { r =>
+        val staging = new java.io.File(s"$crashed/$r/__batch=0/_temporary/0")
+        assert(staging.mkdirs())
+        val part = new java.io.File(s"$fresh/$r/__batch=0").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.copy(part.toPath, new java.io.File(staging, "part-0.parquet").toPath)
+      }
+      for ((work, state) <- Seq(empty -> "pre-created empty", crashed -> "crashed-first-batch")) {
+        sinkAt(work)(b0, 0L)
+        assert(landing(work) === want,
+          s"$name: the first batch over a $state root must land exactly the fresh-root landing")
+      }
+    }
   }
 }
